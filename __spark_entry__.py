@@ -3,7 +3,7 @@
 ``entry`` runs the flagship KG-construction pipeline end-to-end on
 sf0.001; ``queries()``/``oracle_sql()`` register every SQL-expressible
 operator from SURVEY.md §2 (validation rules, report analytics, discovery
-joins, dedup, text analysis, similarity, relational core) for the DuckDB
+joins, dedup, text analysis, similarity, graph, sampling) for the DuckDB
 cross-check at sf0.01.  Non-SQL-expressible ops (LSH blocking, extraction
 UDFs) are registered without oracles → rows-only checks; their strong
 correctness checks live in tests/ (P/R vs generated expected triples).
@@ -224,10 +224,6 @@ def _violations_of(
 
 
 _CUST_SHAPE = "ex:CustomerShape"
-
-
-def _shacl_oracle(select: str) -> str:
-    return select
 
 
 # ---------------------------------------------------------------------------
@@ -651,147 +647,6 @@ def q_shacl_dcat_ap_es_report(spark, sf_dir):
     ).agg(F.count("*").alias("n"))
 
 
-def q_tpch_q1(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    dec = lambda c: F.col(c).cast("decimal(18,4)")  # noqa: E731
-    return (
-        li.filter(F.col("l_shipdate") <= "1998-09-02")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(dec("l_quantity")).cast("double").alias("sum_qty"),
-            F.sum(dec("l_extendedprice")).cast("double").alias("sum_base_price"),
-            F.round(
-                F.sum(dec("l_extendedprice") * (F.lit(1).cast("decimal(18,4)") - dec("l_discount"))), 2
-            )
-            .cast("double")
-            .alias("sum_disc_price"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-def q_tpch_q3(spark, sf_dir):
-    """TPC-H Q3-style shipping priority (adapted to the driver's reduced
-    lineitem/orders schema): 3-way join + agg + top-10."""
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet").filter(
-        F.col("c_mktsegment") == "BUILDING"
-    )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
-        F.col("o_orderdate") < "1996-03-15"
-    )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").filter(
-        F.col("l_shipdate") > "1996-03-15"
-    )
-    dec = lambda c_: F.col(c_).cast("decimal(18,4)")  # noqa: E731
-    return (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(c, o["o_custkey"] == c["c_custkey"])
-        .groupBy("l_orderkey", "o_orderdate")
-        .agg(
-            F.round(F.sum(dec("l_extendedprice") * (F.lit(1).cast("decimal(18,4)") - dec("l_discount"))), 2)
-            .cast("double")
-            .alias("revenue")
-        )
-        .orderBy(F.desc("revenue"), "o_orderdate", "l_orderkey")
-        .limit(10)
-    )
-
-
-def q_tpch_q12(spark, sf_dir):
-    """TPC-H Q12-style priority classification (adapted): join + conditional
-    agg by return flag."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").filter(
-        (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1997-01-01")
-    )
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .groupBy("l_returnflag")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(high, 0).otherwise(1)).alias("low_line_count"),
-        )
-    )
-
-
-def q_revenue_by_nation(spark, sf_dir):
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    return (
-        o.join(c, o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,4)")).cast("double").alias("revenue"),
-            F.count("*").alias("n_orders"),
-        )
-    )
-
-
-def q_top_parts(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.groupBy("l_partkey")
-        .agg(F.count("*").alias("n"), F.sum(F.col("l_quantity").cast("decimal(18,4)")).cast("double").alias("qty"))
-        .orderBy(F.desc("n"), "l_partkey")
-        .limit(8)
-    )
-
-
-def q_distinct_users_by_type(spark, sf_dir):
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("users"), F.count("*").alias("n")
-    )
-
-
-def q_user_event_rank(spark, sf_dir):
-    from pyspark.sql.window import Window
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return ev.select(
-        "event_id", "user_id", F.row_number().over(w).alias("rn")
-    )
-
-
-def q_sessionize(spark, sf_dir):
-    from pyspark.sql.window import Window
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    new_sess = F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-    return (
-        ev.select("user_id", new_sess.alias("ns"))
-        .groupBy("user_id")
-        .agg(F.sum("ns").cast("long").alias("n_sessions"))
-    )
-
-
-def q_orders_no_lineitems(spark, sf_dir):
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        o.join(li, o["o_orderkey"] == li["l_orderkey"], "left_anti")
-        .groupBy("o_orderstatus")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-def q_hourly_event_pivot(spark, sf_dir):
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    types = ["click", "view", "purchase", "signup", "error"]
-    return (
-        ev.groupBy(F.date_format("ts", "yyyy-MM-dd HH").alias("hour"))
-        .pivot("event_type", types)
-        .count()
-        .na.fill(0, types)
-    )
-
-
 def q_dedup_exact(spark, sf_dir):
     return exact_duplicates(_docs_doubled(spark, sf_dir)).select(
         "content_hash", "n_docs", "keeper"
@@ -832,39 +687,6 @@ def q_embedding_near_dup(spark, sf_dir):
         emb.select((F.col("vec_id") + 1000000).alias("vec_id"), "embedding")
     )
     return cosine_near_dup_pairs(doubled, threshold=0.9, exact=True)
-
-
-def q_multimodal_features(spark, sf_dir):
-    from shacl_validator_spark.sources.multimodal import (
-        extract_features,
-        synthesize_media,
-    )
-
-    feats = extract_features(synthesize_media(spark, sf_dir))
-    return feats.select(
-        "media_id", "kind", "n_bytes", F.size("feature").alias("n_dims")
-    )
-
-
-def q_frame_sample(spark, sf_dir):
-    from shacl_validator_spark.sources.multimodal import sample_frames, synthesize_media
-
-    return sample_frames(synthesize_media(spark, sf_dir)).select(
-        "media_id", "frame_idx", "ts_ms"
-    )
-
-
-def q_doc_length_stats(spark, sf_dir):
-    """Per-language document-length distribution: exact p50/p90 + mean —
-    the corpus-profiling statistics pass of a training-data pipeline."""
-    d = _docs(spark, sf_dir)
-    ln = F.length("text").cast("double")
-    return d.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.round(F.avg(ln), 4).alias("mean_len"),
-        F.percentile(ln, F.lit(0.5)).alias("p50"),
-        F.percentile(ln, F.lit(0.9)).alias("p90"),
-    )
 
 
 def q_clean_corpus(spark, sf_dir):
@@ -1163,67 +985,6 @@ def q_bpe_encode(spark, sf_dir):
     )
 
 
-def q_range_join(spark, sf_dir):
-    """Bucketed point-in-interval join (operators/temporal.py range_join):
-    every event paired with the 45-minute maintenance windows that contain
-    it (windows anchored at every 97th event).  The naive BETWEEN
-    condition would plan as a nested loop; here both sides map onto
-    30-minute buckets and meet in a bucket-keyed EQUI-join + residual
-    filter — each qualifying pair meets exactly once (the point's bucket).
-    Oracle: DuckDB's native BETWEEN join."""
-    from shacl_validator_spark.operators.temporal import range_join
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select("event_id", "ts")
-    wins = ev.filter(F.col("event_id") % 97 == 0).select(
-        F.col("event_id").alias("window_id"),
-        F.col("ts").alias("w_start"),
-        (F.col("ts") + F.expr("INTERVAL 45 MINUTES")).alias("w_end"),
-    )
-    out = range_join(ev, wins, "ts", "w_start", "w_end", bucket_seconds=1800)
-    return out.select("event_id", "window_id")
-
-
-def q_interval_join(spark, sf_dir):
-    """Interval-overlap join (operators/temporal.py interval_join): user
-    sessions (40-min windows anchored at every 89th event) × maintenance
-    windows (45-min at every 97th event).  Both sides explode onto
-    30-minute buckets; a pair survives ONLY in the bucket of
-    max(start, start) — exactly-once without dedup.  Oracle: DuckDB's
-    native overlap join."""
-    from shacl_validator_spark.operators.temporal import interval_join
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select("event_id", "ts")
-    sess = ev.filter(F.col("event_id") % 89 == 0).select(
-        F.col("event_id").alias("session_id"),
-        F.col("ts").alias("s_start"),
-        (F.col("ts") + F.expr("INTERVAL 40 MINUTES")).alias("s_end"),
-    )
-    wins = ev.filter(F.col("event_id") % 97 == 0).select(
-        F.col("event_id").alias("window_id"),
-        F.col("ts").alias("w_start"),
-        (F.col("ts") + F.expr("INTERVAL 45 MINUTES")).alias("w_end"),
-    )
-    out = interval_join(
-        sess, wins, ("s_start", "s_end"), ("w_start", "w_end"), bucket_seconds=1800
-    )
-    return out.select("session_id", "window_id")
-
-
-def q_bm25_rank(spark, sf_dir):
-    """Ranked retrieval (Okapi BM25, Lucene idf) for a fixed 3-term query
-    over the documents corpus — operators/index.py bm25_rank: the scored
-    upgrade of the reference's substring search (P7).  The (doc, term)
-    stream is filtered to the query before aggregation; df/avgdl are
-    broadcast one-row/query-sized relations; top-15 by (score desc, doc)."""
-    from shacl_validator_spark.operators.index import bm25_rank
-
-    return bm25_rank(
-        _docs(spark, sf_dir).select("doc_id", "text"),
-        ["hash", "join", "window"],
-        k=15,
-    )
-
-
 def q_markdown_preprocess(spark, sf_dir):
     """F9 (ValidationResults.tsx:131-149): message markdown preprocessing —
     tables pass through, pipe-less text passes through, otherwise pipes
@@ -1290,16 +1051,6 @@ def q_apply_mix(spark, sf_dir):
     w = temperature_weights(d, "lang", tau=2.0).select("lang", "weight")
     out = apply_mix(d, w, "lang")
     return out.select("doc_id", "lang", F.col("copy_idx").cast("long").alias("copy_idx"))
-
-
-def q_shard_manifest(spark, sf_dir):
-    """Training-shard delivery manifest: deterministic md5 shard
-    assignment (8 shards) + per-shard doc/token/byte counts and the
-    order-insensitive content-XOR checksum — sources/shards.py
-    shard_manifest.  One map-side-combined aggregation keyed by shard."""
-    from shacl_validator_spark.sources.shards import shard_manifest
-
-    return shard_manifest(_docs(spark, sf_dir).select("doc_id", "text"), 8)
 
 
 def q_key_skew_profile(spark, sf_dir):
@@ -1438,30 +1189,6 @@ def q_incremental_dedup_lsh(spark, sf_dir):
     )
 
 
-def q_asof_view_click(spark, sf_dir):
-    """As-of join (the operator Spark lacks natively, built as union +
-    window carry-forward — operators/temporal.py): each click event gets
-    the user's most recent view at-or-before it; audited per user bucket
-    against DuckDB's native ASOF LEFT JOIN."""
-    from shacl_validator_spark.operators.temporal import asof_join
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    clicks = ev.filter(F.col("event_type") == "click").select("user_id", "ts", "event_id")
-    views = ev.filter(F.col("event_type") == "view").select("user_id", "ts")
-    j = asof_join(clicks, views, on=["user_id"], ts_col="ts", right_cols=[])
-    # events.ts is TIMESTAMP_NTZ; unix_micros wants TIMESTAMP — the cast
-    # applies the session UTC offset to both sides, so the DIFFERENCE is
-    # offset-free and matches DuckDB's epoch_us subtraction exactly
-    gap = F.unix_micros(F.col("ts").cast("timestamp")) - F.unix_micros(
-        F.col("asof_ts").cast("timestamp")
-    )
-    return j.groupBy((F.col("user_id") % 10).alias("user_bucket")).agg(
-        F.count(F.lit(1)).alias("n_clicks"),
-        F.sum(F.col("asof_ts").isNotNull().cast("long")).alias("matched"),
-        F.sum(F.coalesce(gap, F.lit(0))).alias("gap_us"),
-    )
-
-
 def q_embedding_quantize(spark, sf_dir):
     """Int8 scalar quantization audit: per label, the exact integer sums
     of the quantized components — pins scale computation and rounding
@@ -1503,25 +1230,6 @@ def q_unicode_nfc(spark, sf_dir):
     )
 
 
-def q_pack_windows(spark, sf_dir):
-    """GPT-style sequence packing audit: documents concatenated into 8
-    md5-bucketed shard streams and chunked into 2048-token windows; per
-    shard we pin doc/token totals, the window count, boundary straddlers,
-    and the last window index."""
-    from shacl_validator_spark.operators.packing import pack_windows
-
-    p = pack_windows(_docs(spark, sf_dir).select("doc_id", "text"), 2048, buckets=8)
-    return p.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").alias("total_tokens"),
-        (F.floor((F.sum("n_tokens") - 1) / 2048) + 1).alias("n_windows"),
-        F.sum((F.col("first_window") != F.col("last_window")).cast("long")).alias(
-            "n_straddlers"
-        ),
-        F.max("last_window").alias("max_window"),
-    )
-
-
 def q_length_quantile_gate(spark, sf_dir):
     """Per-language histogram-quantile gate (drop the bottom 20% by
     n_chars within each language): per lang, the doc count, the integer
@@ -1538,24 +1246,6 @@ def q_length_quantile_gate(spark, sf_dir):
     )
     return thr.join(kept, "lang").select(
         "lang", "n_rows", "threshold", "kept"
-    )
-
-
-def q_chunk_windows(spark, sf_dir):
-    """Sliding-window chunking (32-word windows, stride 24): every chunk
-    with its index, word offsets, and an md5 over the chunk text so the
-    oracle pins the exact chunk contents."""
-    from shacl_validator_spark.operators.packing import chunk_sliding
-
-    c = chunk_sliding(
-        _docs(spark, sf_dir).select("doc_id", "text"), 32, 24
-    )
-    return c.select(
-        "doc_id",
-        "chunk_idx",
-        "start_word",
-        "n_words",
-        F.md5(F.col("chunk")).alias("chunk_md5"),
     )
 
 
@@ -1584,18 +1274,6 @@ def q_embedding_hygiene(spark, sf_dir):
         F.count(F.lit(1)).alias("n"),
         F.min("norm").alias("lo_norm"),
         F.max("norm").alias("hi_norm"),
-    )
-
-
-def q_json_props_stats(spark, sf_dir):
-    """Semi-structured extraction: JSON property pulled out of the raw
-    event payload column, typed, and aggregated per event type."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    k = F.get_json_object("props", "$.k").cast("long")
-    return ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(k).alias("sum_k"),
-        F.round(F.avg(k), 4).alias("avg_k"),
     )
 
 
@@ -2007,24 +1685,6 @@ def q_graph_kcore(spark, sf_dir):
     return kcore(_coorder_part_edges(spark, sf_dir), k=2, iters=3)
 
 
-def q_inverted_index(spark, sf_dir):
-    # postings serialized '|'-joined (already ascending by contract): the
-    # driver canonicalizer can't hash list cells (VERDICT r4 #1a)
-    from shacl_validator_spark.operators.index import inverted_index
-
-    return inverted_index(_docs(spark, sf_dir), max_postings=10).select(
-        "term",
-        "df",
-        F.concat_ws("|", F.col("postings").cast("array<string>")).alias("postings"),
-    )
-
-
-def q_tfidf_topk(spark, sf_dir):
-    from shacl_validator_spark.operators.index import tfidf_topk
-
-    return tfidf_topk(_docs(spark, sf_dir), k=3)
-
-
 # Deterministic noisy-URL synthesis for the URL/host operators: page_num
 # collapses each (10m, 10m+1) doc pair onto one logical page, while the
 # crawl-noise axes (scheme/host case, default port, trailing slash,
@@ -2152,23 +1812,10 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "shacl_sparql_minus": q_shacl_sparql_minus,
         "shacl_report_summary": q_shacl_report_summary,
         "shacl_dcat_ap_es_report": q_shacl_dcat_ap_es_report,
-        "tpch_q1": q_tpch_q1,
-        "tpch_q3": q_tpch_q3,
-        "tpch_q12": q_tpch_q12,
-        "revenue_by_nation": q_revenue_by_nation,
-        "top_parts": q_top_parts,
-        "distinct_users_by_type": q_distinct_users_by_type,
-        "user_event_rank": q_user_event_rank,
-        "sessionize": q_sessionize,
-        "orders_no_lineitems": q_orders_no_lineitems,
-        "hourly_event_pivot": q_hourly_event_pivot,
         "dedup_exact": q_dedup_exact,
         "minhash_dup_pairs": q_minhash_dup_pairs,
         "ngram_jaccard": q_ngram_jaccard,
         "embedding_near_dup": q_embedding_near_dup,
-        "multimodal_features": q_multimodal_features,
-        "frame_sample": q_frame_sample,
-        "doc_length_stats": q_doc_length_stats,
         "clean_corpus": q_clean_corpus,
         "dedup_clusters": q_dedup_clusters,
         "chunk_dedup": q_chunk_dedup,
@@ -2184,26 +1831,18 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hash_sample": q_hash_sample,
         "dsir_weights": q_dsir_weights,
         "temperature_weights": q_temperature_weights,
-        "shard_manifest": q_shard_manifest,
         "corpus_datasheet": q_corpus_datasheet,
         "key_skew_profile": q_key_skew_profile,
         "bpe_encode": q_bpe_encode,
         "markdown_preprocess": q_markdown_preprocess,
-        "bm25_rank": q_bm25_rank,
-        "range_join": q_range_join,
-        "interval_join": q_interval_join,
         "apply_mix": q_apply_mix,
         "file_size_report": q_file_size_report,
         "mix_weights": q_mix_weights,
         "vocab_topk": q_vocab_topk,
-        "asof_view_click": q_asof_view_click,
         "embedding_quantize": q_embedding_quantize,
         "unicode_nfc": q_unicode_nfc,
-        "pack_windows": q_pack_windows,
         "length_quantile_gate": q_length_quantile_gate,
-        "chunk_windows": q_chunk_windows,
         "embedding_hygiene": q_embedding_hygiene,
-        "json_props_stats": q_json_props_stats,
         "token_stats": q_token_stats,
         "quality_by_lang": q_quality_by_lang,
         "language_id": q_language_id,
@@ -2233,8 +1872,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "graph_pagerank": q_graph_pagerank,
         "graph_triangles": q_graph_triangles,
         "graph_kcore": q_graph_kcore,
-        "inverted_index": q_inverted_index,
-        "tfidf_topk": q_tfidf_topk,
         "url_normalize": q_url_normalize,
         "url_dedup": q_url_dedup,
         "host_cap": q_host_cap,
@@ -2251,7 +1888,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 _V = f"({SYNTHETIC_VIOLATIONS_SQL})"
 
-_CUSTOMER_TARGETS = "SELECT 'cust:' || CAST(c_custkey AS VARCHAR) AS focusNode, c_custkey FROM customer"
 
 _TOKEN_RE_SQL = "'[A-Za-z0-9]+(?:''[a-z]+)?'"
 
@@ -2880,98 +2516,6 @@ def oracle_sql() -> dict[str, str]:
         WHERE k % 11 = 0 AND k % 4 != 0
     """
 
-    sql["tpch_q1"] = """
-        SELECT l_returnflag, l_linestatus,
-               CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-               CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
-               CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) *
-                   (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))), 2) AS DOUBLE) AS sum_disc_price,
-               COUNT(*) AS count_order
-        FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        GROUP BY l_returnflag, l_linestatus
-    """
-
-    sql["tpch_q3"] = """
-        SELECT l_orderkey, o_orderdate,
-               CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) *
-                   (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))), 2) AS DOUBLE) AS revenue
-        FROM lineitem
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        WHERE c_mktsegment = 'BUILDING'
-          AND o_orderdate < TIMESTAMP '1996-03-15 00:00:00'
-          AND l_shipdate > TIMESTAMP '1996-03-15 00:00:00'
-        GROUP BY l_orderkey, o_orderdate
-        ORDER BY revenue DESC, o_orderdate, l_orderkey LIMIT 10
-    """
-
-    sql["tpch_q12"] = """
-        SELECT l_returnflag,
-               CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                             THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-               CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                             THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-          AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        GROUP BY l_returnflag
-    """
-
-    sql["revenue_by_nation"] = """
-        SELECT n_name AS nation,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-               COUNT(*) AS n_orders
-        FROM orders JOIN customer ON o_custkey = c_custkey
-        JOIN nation ON c_nationkey = n_nationkey
-        GROUP BY n_name
-    """
-
-    sql["top_parts"] = """
-        SELECT l_partkey, COUNT(*) AS n,
-               CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS qty
-        FROM lineitem GROUP BY l_partkey ORDER BY n DESC, l_partkey LIMIT 8
-    """
-
-    sql["distinct_users_by_type"] = """
-        SELECT event_type, COUNT(DISTINCT user_id) AS users, COUNT(*) AS n
-        FROM events GROUP BY event_type
-    """
-
-    sql["user_event_rank"] = """
-        SELECT event_id, user_id,
-               ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        FROM events
-    """
-
-    sql["sessionize"] = """
-        SELECT user_id, CAST(SUM(ns) AS BIGINT) AS n_sessions FROM (
-          SELECT user_id,
-                 CASE WHEN prev_ts IS NULL
-                      OR date_diff('second', prev_ts, ts) > 1800 THEN 1 ELSE 0 END AS ns
-          FROM (
-            SELECT user_id, ts,
-                   LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-            FROM events
-          )
-        ) GROUP BY user_id
-    """
-
-    sql["orders_no_lineitems"] = """
-        SELECT o_orderstatus, COUNT(*) AS n FROM orders
-        WHERE o_orderkey NOT IN (SELECT l_orderkey FROM lineitem)
-        GROUP BY o_orderstatus
-    """
-
-    sql["hourly_event_pivot"] = """
-        SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H') AS hour,
-               COUNT(*) FILTER (event_type = 'click') AS "click",
-               COUNT(*) FILTER (event_type = 'view') AS "view",
-               COUNT(*) FILTER (event_type = 'purchase') AS "purchase",
-               COUNT(*) FILTER (event_type = 'signup') AS "signup",
-               COUNT(*) FILTER (event_type = 'error') AS "error"
-        FROM events GROUP BY 1
-    """
-
     sql["dedup_exact"] = f"""
         SELECT md5({_NORM_TEXT}) AS content_hash,
                COUNT(*) AS n_docs, MIN(doc_id) AS keeper
@@ -3023,31 +2567,6 @@ def oracle_sql() -> dict[str, str]:
         FROM e a JOIN e b ON a.vec_id < b.vec_id
         WHERE ROUND(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
                                            CAST(b.embedding AS DOUBLE[])), 6) >= 0.9
-    """
-
-    sql["multimodal_features"] = """
-        SELECT doc_id AS media_id,
-               CASE WHEN doc_id % 3 = 0 THEN 'image'
-                    WHEN doc_id % 3 = 1 THEN 'audio'
-                    ELSE 'video' END AS kind,
-               CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-               16 AS n_dims
-        FROM documents
-    """
-
-    sql["frame_sample"] = """
-        SELECT doc_id AS media_id, CAST(i AS INT) AS frame_idx,
-               CAST(i * 1000 AS BIGINT) AS ts_ms
-        FROM documents, (SELECT UNNEST(generate_series(0, 9)) AS i)
-        WHERE doc_id % 3 = 2 AND i <= doc_id % 10
-    """
-
-    sql["doc_length_stats"] = """
-        SELECT lang, COUNT(*) AS n_docs,
-               ROUND(AVG(CAST(length(text) AS DOUBLE)), 4) AS mean_len,
-               quantile_cont(CAST(length(text) AS DOUBLE), 0.5) AS p50,
-               quantile_cont(CAST(length(text) AS DOUBLE), 0.9) AS p90
-        FROM documents GROUP BY lang
     """
 
     sql["clean_corpus"] = f"""
@@ -3324,70 +2843,6 @@ def oracle_sql() -> dict[str, str]:
         GROUP BY pd.doc_id
     """
 
-    sql["range_join"] = """
-        WITH wins AS (
-          SELECT event_id AS window_id, ts AS w_start,
-                 ts + INTERVAL 45 MINUTE AS w_end
-          FROM events WHERE event_id % 97 = 0
-        )
-        SELECT e.event_id, w.window_id
-        FROM events e JOIN wins w
-          ON e.ts BETWEEN w.w_start AND w.w_end
-    """
-
-    sql["interval_join"] = """
-        WITH sess AS (
-          SELECT event_id AS session_id, ts AS s_start,
-                 ts + INTERVAL 40 MINUTE AS s_end
-          FROM events WHERE event_id % 89 = 0
-        ),
-        wins AS (
-          SELECT event_id AS window_id, ts AS w_start,
-                 ts + INTERVAL 45 MINUTE AS w_end
-          FROM events WHERE event_id % 97 = 0
-        )
-        SELECT s.session_id, w.window_id
-        FROM sess s JOIN wins w
-          ON s.s_start <= w.w_end AND w.w_start <= s.s_end
-    """
-
-    sql["bm25_rank"] = f"""
-        WITH toks AS (
-          SELECT doc_id,
-                 unnest(regexp_extract_all(lower(text), {_TOKEN_RE_SQL})) AS term
-          FROM documents
-        ),
-        dl AS (
-          SELECT doc_id,
-                 len(regexp_extract_all(lower(text), {_TOKEN_RE_SQL})) AS dl
-          FROM documents
-        ),
-        stats AS (SELECT COUNT(*) AS n_docs, AVG(dl) AS avgdl FROM dl),
-        qtf AS (
-          SELECT doc_id, term, COUNT(*) AS tf FROM toks
-          WHERE term IN ('hash', 'join', 'window')
-          GROUP BY doc_id, term
-        ),
-        dft AS (SELECT term, COUNT(*) AS df FROM qtf GROUP BY term),
-        scored AS (
-          SELECT qtf.doc_id,
-                 ROUND(SUM(
-                   ln(1.0 + (stats.n_docs - dft.df + 0.5) / (dft.df + 0.5))
-                   * (qtf.tf * 2.2)
-                   / (qtf.tf + 1.2 * (0.25 + 0.75 * dl.dl / stats.avgdl))
-                 ), 6) AS score
-          FROM qtf
-          JOIN dft USING (term)
-          JOIN dl ON qtf.doc_id = dl.doc_id, stats
-          GROUP BY qtf.doc_id
-        )
-        SELECT doc_id, score, CAST(rank AS INT) AS rank FROM (
-          SELECT doc_id, score,
-                 ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS rank
-          FROM scored
-        ) WHERE rank <= 15
-    """
-
     sql["markdown_preprocess"] = """
         WITH m AS (
           SELECT doc_id,
@@ -3469,24 +2924,6 @@ def oracle_sql() -> dict[str, str]:
                     AS INT) AS n_pieces,
                md5(pieces_str) AS pieces_hash
         FROM enc
-    """
-
-    sql["shard_manifest"] = f"""
-        WITH s AS (
-          SELECT CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)
-                           AS UBIGINT) % 8 AS INT) AS shard,
-                 text
-          FROM documents
-        )
-        SELECT shard,
-               CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(len(regexp_extract_all(text, {_TOKEN_RE_SQL})))
-                    AS BIGINT) AS n_tokens,
-               CAST(SUM(strlen(text)) AS BIGINT) AS text_bytes,
-               CAST(BIT_XOR(CAST(CAST('0x' || substr(md5(text), 1, 15)
-                                      AS UBIGINT) AS BIGINT)) AS BIGINT)
-                   AS content_xor
-        FROM s GROUP BY shard
     """
 
     sql["key_skew_profile"] = """
@@ -3589,25 +3026,6 @@ def oracle_sql() -> dict[str, str]:
         GROUP BY token ORDER BY n DESC, token ASC LIMIT 25
     """
 
-    sql["asof_view_click"] = """
-        WITH clicks AS (
-          SELECT user_id, ts, event_id FROM events WHERE event_type = 'click'
-        ),
-        views AS (SELECT user_id, ts FROM events WHERE event_type = 'view'),
-        j AS (
-          SELECT c.user_id, c.ts, v.ts AS vts
-          FROM clicks c ASOF LEFT JOIN views v
-            ON c.user_id = v.user_id AND v.ts <= c.ts
-        )
-        SELECT user_id % 10 AS user_bucket,
-               CAST(COUNT(*) AS BIGINT) AS n_clicks,
-               CAST(SUM(CASE WHEN vts IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-                 AS matched,
-               CAST(SUM(COALESCE(epoch_us(ts) - epoch_us(vts), 0)) AS BIGINT)
-                 AS gap_us
-        FROM j GROUP BY 1
-    """
-
     sql["embedding_quantize"] = """
         WITH q AS (
           SELECT label,
@@ -3642,33 +3060,6 @@ def oracle_sql() -> dict[str, str]:
         FROM d GROUP BY lang
     """
 
-    sql["pack_windows"] = f"""
-        WITH t AS (
-          SELECT doc_id,
-                 CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)
-                      AS UBIGINT) % 8 AS BIGINT) AS bucket,
-                 md5(CAST(doc_id AS VARCHAR)) AS k,
-                 len(regexp_extract_all(text, {_TOKEN_RE_SQL})) AS n_tokens
-          FROM documents
-        ),
-        p AS (
-          SELECT bucket, n_tokens,
-                 COALESCE(SUM(n_tokens) OVER (
-                   PARTITION BY bucket ORDER BY k, doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS s
-          FROM t
-        )
-        SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-               CAST(floor((SUM(n_tokens) - 1) / 2048) + 1 AS BIGINT) AS n_windows,
-               CAST(SUM(CASE WHEN floor(s / 2048) <>
-                    floor((s + greatest(n_tokens, 1) - 1) / 2048)
-                    THEN 1 ELSE 0 END) AS BIGINT) AS n_straddlers,
-               CAST(MAX(floor((s + greatest(n_tokens, 1) - 1) / 2048)) AS BIGINT)
-                 AS max_window
-        FROM p GROUP BY bucket
-    """
-
     sql["length_quantile_gate"] = """
         WITH h AS (
           SELECT lang, greatest(n_chars, 0) // 64 AS bin, COUNT(*) AS c
@@ -3691,26 +3082,6 @@ def oracle_sql() -> dict[str, str]:
                     AS BIGINT) AS kept
         FROM documents d JOIN thr t USING (lang)
         GROUP BY 1, 2, 3
-    """
-
-    sql["chunk_windows"] = r"""
-        WITH w AS (
-          SELECT doc_id,
-                 list_filter(regexp_split_to_array(trim(text), '\s+'),
-                             x -> x <> '') AS ws
-          FROM documents
-        ),
-        s AS (
-          SELECT doc_id, ws, unnest(range(0, len(ws), 24)) AS st
-          FROM w WHERE len(ws) > 0
-        )
-        SELECT doc_id,
-               CAST(st // 24 AS INTEGER) AS chunk_idx,
-               CAST(st AS INTEGER) AS start_word,
-               CAST(least(len(ws) - st, 32) AS INTEGER) AS n_words,
-               md5(array_to_string(list_slice(ws, st + 1, st + 32), ' '))
-                 AS chunk_md5
-        FROM s
     """
 
     sql["embedding_hygiene"] = """
@@ -3751,13 +3122,6 @@ def oracle_sql() -> dict[str, str]:
         SELECT flag, CAST(COUNT(*) AS BIGINT) AS n,
                MIN(norm) AS lo_norm, MAX(norm) AS hi_norm
         FROM f GROUP BY flag
-    """
-
-    sql["json_props_stats"] = """
-        SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
-               CAST(SUM(CAST(props->>'$.k' AS BIGINT)) AS BIGINT) AS sum_k,
-               ROUND(AVG(CAST(props->>'$.k' AS BIGINT)), 4) AS avg_k
-        FROM events GROUP BY event_type
     """
 
     sql["token_stats"] = f"""
@@ -4253,45 +3617,6 @@ def oracle_sql() -> dict[str, str]:
         SELECT node, COUNT(*) AS degree FROM (
           SELECT src AS node FROM e3 UNION ALL SELECT dst AS node FROM e3
         ) GROUP BY node
-    """
-
-    # retrieval-index construction: same TOKEN_PATTERN contract as
-    # vocab_topk; tfidf uses the fixed-point rational idf documented in
-    # operators/index.py (exact bigints, no float log)
-    _doc_terms = f"""
-        dt AS (
-          SELECT doc, term, COUNT(*) AS tf FROM (
-            SELECT doc_id AS doc,
-                   unnest(regexp_extract_all(lower(text), {_TOKEN_RE_SQL})) AS term
-            FROM documents
-          ) GROUP BY doc, term
-        )
-    """
-
-    sql["inverted_index"] = f"""
-        WITH {_doc_terms}
-        SELECT term, CAST(COUNT(*) AS BIGINT) AS df,
-               array_to_string((list_sort(list(doc)))[1:10], '|') AS postings
-        FROM dt GROUP BY term
-    """
-
-    sql["tfidf_topk"] = f"""
-        WITH {_doc_terms},
-        dfs AS (SELECT term, COUNT(*) AS df FROM dt GROUP BY term),
-        nn AS (SELECT COUNT(*) AS n FROM documents),
-        scored AS (
-          SELECT doc, term,
-                 CAST(tf * (((SELECT n FROM nn) * 1000000) // df) AS BIGINT) AS score
-          FROM dt JOIN dfs USING (term)
-        ),
-        r AS (
-          SELECT doc, term, score,
-                 ROW_NUMBER() OVER (
-                   PARTITION BY doc ORDER BY score DESC, term ASC
-                 ) AS rank
-          FROM scored
-        )
-        SELECT doc, term, score, CAST(rank AS INT) AS rank FROM r WHERE rank <= 3
     """
 
     # URL canonicalization + host shaping: the oracle re-implements BOTH

@@ -105,12 +105,6 @@ def run_bench(
         "shacl_dcat_ap_es_report",
         "severity_summary",
         "grouped_findings",
-        "tpch_q1",
-        "tpch_q3",
-        "revenue_by_nation",
-        "top_parts",
-        "user_event_rank",
-        "sessionize",
         "dedup_exact",
         "minhash_dup_pairs",
         "dedup_clusters",
@@ -120,7 +114,6 @@ def run_bench(
         "lm_logprob",
         "decontaminate",
         "unicode_nfc",
-        "asof_view_click",
         "embedding_quantize",
         "embedding_ivf_topk",
         "token_stats",

@@ -487,8 +487,14 @@ def run_pipeline(
                     + "\n"
                 )
             done.add(key)
-            with open(manifest_path, "w") as f:
+            # write-then-rename: a crash mid-write leaves the previous
+            # manifest whole for the resume to read
+            tmp_path = manifest_path + ".tmp"
+            with open(tmp_path, "w") as f:
                 json.dump({k: "done" for k in sorted(done)}, f)
+                f.flush()
+                os.fsync(f.fileno())
+            os.replace(tmp_path, manifest_path)
         _bump("merge", t0)
 
         ent = surface_map.groupBy("canonical_id").agg(

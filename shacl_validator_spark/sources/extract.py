@@ -381,12 +381,14 @@ def extract_raw_triples_from_html(
 
     The JVM candidate gate adapts to html: ``extract_text`` yields either
     a byte-substring of the html (main-span path) or a tags→spaces
-    rewrite, so a text containing the full infix literal implies the html
-    contains the literal's space-TRIMMED core (the surrounding spaces may
-    come from stripped tags).  Gating html on the trimmed literals is
-    therefore a sound superset filter: never drops a true candidate,
-    keeps at most a few false ones for the Python kernel to reject.
-    Differential equality with the two-pass path is pinned by
+    rewrite, so any space-free run of the text is a byte-substring of the
+    html, but each space of an infix literal may come from a stripped tag
+    (``is<b>located in``).  The gate therefore tests one word per
+    literal, its longest (``located``, ``publishes``, ``founded``): a text
+    containing the full infix literal implies the html contains that
+    word, so the gate is a sound superset filter that never drops a true
+    candidate and keeps at most a few false ones for the Python kernel to
+    reject.  Differential equality with the two-pass path is pinned by
     tests/test_extract.py."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -402,7 +404,8 @@ def extract_raw_triples_from_html(
     if gate and PATTERN_GATE_LITERALS:
         keep = None
         for lit in PATTERN_GATE_LITERALS:
-            c = F.contains(F.col("html"), F.lit(lit.strip().encode()))
+            word = max(lit.split(), key=len)
+            c = F.contains(F.col("html"), F.lit(word.encode()))
             keep = c if keep is None else keep | c
         cand = cand.filter(keep)
     return cand.mapInPandas(run, schema=RAW_TRIPLE_SCHEMA)

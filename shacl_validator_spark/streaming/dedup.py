@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.dedup import _normalized, shingles
+from ..operators.dedup import _normalized
 
 
 def dedup_stream(
@@ -41,64 +41,3 @@ def dedup_stream(
         .dropDuplicatesWithinWatermark(["content_hash"])
     )
 
-
-def streaming_minhash_sig(
-    text, num_perm: int = 16, shingle_n: int = 3
-) -> F.Column:
-    """Per-row MinHash signature — the AGGREGATION-FREE form of
-    ``dedup.minhash_signatures``: sig[j] = array_min over the row's shingle
-    hashes of the j-mixed hash.  min over the multiset equals min over the
-    distinct set, so the value is IDENTICAL to the batch signature (the
-    equality the tests pin); being a narrow map it composes with streaming
-    stateful operators where a groupBy cannot.
-
-    The shingle-hash array is bound once via the single-element-array
-    transform (Catalyst does not CSE through higher-order lambdas — a free
-    reference would re-tokenize once per permutation).
-    """
-    hs = F.transform(shingles(text, shingle_n), lambda sh: F.xxhash64(sh))
-    return F.element_at(
-        F.transform(
-            F.array(hs),
-            lambda h: F.transform(
-                F.sequence(F.lit(0), F.lit(num_perm - 1)),
-                lambda j: F.array_min(
-                    F.transform(h, lambda x: F.xxhash64(x, j))
-                ),
-            ),
-        ),
-        1,
-    )
-
-
-def near_dedup_stream(
-    docs_stream: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-    num_perm: int = 16,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Streaming NEAR-duplicate gate: first-seen filter keyed by the full
-    MinHash signature instead of the content hash — re-crawls that shuffle
-    whitespace, repeat boilerplate blocks, or permute template sections
-    hash to the same shingle-set minima and are dropped at the door, where
-    ``dedup_stream`` (byte-identity after normalization) would pass them.
-
-    Signature identity ≈ Jaccard ≈ 1 (all ``num_perm`` minima agree);
-    lower-threshold near-dup recall stays a batch job (``minhash_lsh_pairs``
-    banding needs a bucket JOIN, not per-key streaming state).  State is
-    one 8-byte key per distinct signature within the watermark horizon —
-    same locality argument as ``dedup_stream``.
-
-    Adds ``sig_key`` (xxhash64 of the signature array) to the surviving
-    rows.
-    """
-    return (
-        docs_stream.withColumn(
-            "sig_key",
-            F.xxhash64(streaming_minhash_sig(F.col(text_col), num_perm, shingle_n)),
-        )
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(["sig_key"])
-    )

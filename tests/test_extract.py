@@ -354,9 +354,9 @@ def test_fused_html_extraction_equals_two_pass(spark):
 
 
 def test_fused_html_gate_is_sound_across_tags(spark):
-    """The html gate uses space-TRIMMED infix literals: an infix whose
-    surrounding spaces come from stripped tags (no main-content span, so
-    the tags→spaces fallback builds the text) must still be extracted."""
+    """The html gate tests one word per infix literal: an infix whose
+    spaces come from stripped tags (no main-content span, so the
+    tags→spaces fallback builds the text) must still be extracted."""
     from pyspark.sql import types as T
 
     from shacl_validator_spark.sources.extract import (
@@ -371,6 +371,8 @@ def test_fused_html_gate_is_sound_across_tags(spark):
         ("u2", b"Initech publishes Weekly Data. x"),
         # no relation at all — gate must drop it (and results agree)
         ("u3", b"nothing to see here"),
+        # a tag replaces a space INSIDE the literal
+        ("u4", b"<main><p>Acme Corp is<b>located in Berlin.</b></p></main>"),
     ]
     pages = spark.createDataFrame(
         rows, T.StructType([
@@ -386,3 +388,75 @@ def test_fused_html_gate_is_sound_across_tags(spark):
     b = {tuple(r) for r in fused.collect()}
     assert a == b
     assert any(r[0] == "u1" for r in a), a  # the tag-split case extracted
+    assert any(r[0] == "u4" for r in a), a  # the tag-inside-literal case
+
+
+def test_fused_html_equals_two_pass_under_tag_injection(spark):
+    """Hypothesis differential: relation sentences with html tags injected
+    at arbitrary positions, including in place of the spaces inside an
+    infix literal, with and without the main-content template — the fused
+    kernel must give exactly the two-pass triples."""
+    import os
+
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+    from pyspark.sql import types as T
+
+    from shacl_validator_spark.sources.extract import (
+        extract_raw_triples_from_html,
+        extract_text,
+    )
+
+    fragment = st.sampled_from(
+        [
+            "Acme Corp is located in Berlin. ",
+            "Initech publishes Weekly Data. ",
+            "Globex was founded in 1999. ",
+            "filler words here. ",
+            " is located in ",
+            " was founded in ",
+        ]
+    )
+    tag = st.sampled_from(["<b>", "</b>", "<br/>", '<span class="k">', "</span>"])
+    # (n, tag, replace): replace the (n mod #spaces)-th space with the tag,
+    # or insert the tag at offset n mod (len + 1)
+    edit = st.tuples(st.integers(0, 10**6), tag, st.booleans())
+    wrap = st.sampled_from([("", ""), ('<p id="main">', "</p>"), ("<main><p>", "</p></main>")])
+
+    @st.composite
+    def page(draw):
+        text = "".join(draw(st.lists(fragment, min_size=1, max_size=4)))
+        for n, t, replace in draw(st.lists(edit, max_size=4)):
+            spaces = [i for i, c in enumerate(text) if c == " "]
+            if replace and spaces:
+                i = spaces[n % len(spaces)]
+                text = text[:i] + t + text[i + 1 :]
+            else:
+                i = n % (len(text) + 1)
+                text = text[:i] + t + text[i:]
+        head, tail = draw(wrap)
+        return (head + text + tail).encode()
+
+    schema = T.StructType(
+        [T.StructField("url", T.StringType()), T.StructField("html", T.BinaryType())]
+    )
+
+    @given(htmls=st.lists(page(), min_size=1, max_size=8))
+    @settings(
+        max_examples=int(os.environ.get("PROP_EXAMPLES", "25")),
+        deadline=None,
+        suppress_health_check=[HealthCheck.too_slow],
+    )
+    def check(htmls):
+        pages = spark.createDataFrame(
+            [(f"u{i}", h) for i, h in enumerate(htmls)], schema
+        )
+        two_pass = extract_raw_triples(
+            pages.select("url", extract_text(F.col("html")).alias("text"))
+        )
+        fused = extract_raw_triples_from_html(pages)
+        assert {tuple(r) for r in fused.collect()} == {
+            tuple(r) for r in two_pass.collect()
+        }
+
+    check()

@@ -1,5 +1,5 @@
-"""Unit tests for dedup, similarity, components, salted counts, analytics,
-and multimodal plumbing."""
+"""Unit tests for dedup, similarity, components, salted counts and
+analytics."""
 
 from __future__ import annotations
 
@@ -122,36 +122,6 @@ def test_brute_force_topk_and_lsh(spark):
     assert all(r.cos > 0.5 for r in approx)
 
 
-def test_multimodal_features(spark):
-    from shacl_validator_spark.sources.multimodal import (
-        extract_features,
-        resize_images,
-        sample_frames,
-    )
-
-    rows = [
-        (1, "image", b"\x89PNGfake", {"mime": "image/png", "width": 8, "height": 8, "duration_ms": None}),
-        (2, "video", b"\x00\x00ftypfake", {"mime": "video/mp4", "width": 16, "height": 16, "duration_ms": 3500}),
-    ]
-    media = spark.createDataFrame(
-        rows,
-        "media_id long, kind string, payload binary, "
-        "meta struct<mime:string,width:int,height:int,duration_ms:long>",
-    )
-    feats = extract_features(media, dim=8).collect()
-    assert {f.media_id for f in feats} == {1, 2}
-    assert all(len(f.feature) == 8 for f in feats)
-    # deterministic
-    feats2 = extract_features(media, dim=8).collect()
-    assert {f.media_id: f.feature for f in feats} == {f.media_id: f.feature for f in feats2}
-
-    resized = resize_images(media, 4, 4).collect()
-    assert all(r.meta.width == 4 for r in resized)
-
-    frames = sample_frames(media, every_ms=1000).collect()
-    assert [f.ts_ms for f in frames] == [0, 1000, 2000, 3000]
-
-
 def test_connected_components_small_path_matches_distributed(spark):
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("d", "e"), ("f", "f"), ("c", "g")],
@@ -237,62 +207,6 @@ def test_ivf_pruned_probe_scores_correctly(spark):
         for r in brute_force_topk(base, queries, k=10**6).collect()
     }
     assert all(abs(exact[(r.query_id, r.vec_id)] - r.cos) < 1e-9 for r in rows)
-
-
-def _len_mod7_kernel(payload: bytes, dim: int) -> list[float]:
-    return [float(len(payload) % 7)] * dim
-
-
-def test_multimodal_kernel_selection_seam(spark):
-    """select_kernel picks the real library kernel when importable, the
-    deterministic fake otherwise (sandbox: Pillow absent → fake), and an
-    injected override flows through the Arrow stage end-to-end."""
-    from shacl_validator_spark.sources.multimodal import (
-        extract_features,
-        select_kernel,
-        synthesize_media,
-    )
-
-    # default is the deterministic fake EVERYWHERE (oracle contract) —
-    # real kernels require the caller's use_real opt-in
-    assert select_kernel("image")[0] == "fake"
-    assert select_kernel("audio", use_real=True)[0] == "fake"  # no audio factory
-    # opt-in resolves to the real kernel iff its library imports (sandbox:
-    # no Pillow → fake; a Pillow-equipped host → real)
-    assert select_kernel("image", use_real=True)[0] in ("real", "fake")
-    assert select_kernel("image", override=_len_mod7_kernel)[0] == "override"
-
-    media = synthesize_media(spark, "/root/testdata/sf0.001").limit(6)
-    rows = extract_features(media, dim=4, kernel_override=_len_mod7_kernel).collect()
-    assert rows and all(len(r.feature) == 4 for r in rows)
-    assert all(abs(r.feature[0] - (r.n_bytes % 7)) < 1e-6 for r in rows)
-
-
-def test_multimodal_plumbing(spark, tmp_path):
-    """Media schema, Arrow batch shapes, and stubbed kernels round-trip;
-    decode is a deterministic fake (sandbox has no media libs) but the
-    Spark-side plumbing is real (SURVEY.md training-data ops)."""
-    from shacl_validator_spark.sources.multimodal import (
-        extract_features,
-        resize_images,
-        sample_frames,
-        synthesize_media,
-    )
-
-    media = synthesize_media(spark, "/root/testdata/sf0.001").cache()
-    feats = extract_features(media, dim=8)
-    row = feats.orderBy("media_id").first()
-    assert len(row.feature) == 8 and row.n_bytes > 0
-    # determinism: same payload → same feature vector
-    again = extract_features(media, dim=8).orderBy("media_id").first()
-    assert row.feature == again.feature
-
-    resized = resize_images(media.limit(5), 128, 96).collect()
-    assert all(r.meta.width == 128 and r.meta.height == 96 for r in resized)
-
-    frames = sample_frames(media)
-    per_video = frames.groupBy("media_id").count().collect()
-    assert per_video and all(1 <= r["count"] <= 10 for r in per_video)
 
 
 def test_cosine_near_dup_lsh_blocks_subset_of_exact(spark):

@@ -65,6 +65,45 @@ def test_pipeline_resume_is_idempotent(spark, tmp_path):
     assert res1.merged == total
 
 
+def test_pipeline_resume_after_crash_in_manifest_write(spark, tmp_path, monkeypatch):
+    """A crash partway through the manifest write must leave the previous
+    manifest readable, and the resumed run must end with the same triple
+    table as an uninterrupted run."""
+    from collections import Counter
+
+    import pytest
+
+    pages = synthesize_pages(spark, N)
+    ref = str(tmp_path / "ref")
+    run_pipeline(spark, pages, ref, n_groups=2)
+
+    out = str(tmp_path / "kg")
+    real_dump = json.dump
+    calls = []
+
+    def crashing_dump(obj, f, *args, **kwargs):
+        calls.append(obj)
+        if len(calls) == 2:  # the second group's commit dies mid-write
+            f.write(json.dumps(obj)[:5])
+            f.flush()
+            raise RuntimeError("killed during manifest write")
+        return real_dump(obj, f, *args, **kwargs)
+
+    monkeypatch.setattr(json, "dump", crashing_dump)
+    with pytest.raises(RuntimeError, match="killed during manifest write"):
+        run_pipeline(spark, pages, out, n_groups=2)
+    monkeypatch.setattr(json, "dump", real_dump)
+
+    with open(os.path.join(out, "checkpoint_manifest.json")) as f:
+        assert json.load(f) == calls[0]
+    run_pipeline(spark, pages, out, n_groups=2, resume=True)
+
+    def rows(path):
+        return Counter(map(tuple, spark.read.parquet(f"{path}/triples").collect()))
+
+    assert rows(out) == rows(ref)
+
+
 def test_pipeline_parallel_groups_matches_sequential(spark, tmp_path):
     """parallel_groups drives groups through a thread pool with a
     serialized MERGE commit — outputs must be set-identical to the
